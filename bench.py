@@ -123,6 +123,11 @@ def main() -> None:
                 timings.setdefault(name, -1.0)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
+    cpus_requested = _default_cpus()
+    try:
+        cpus_requested = int(cpus_requested)
+    except ValueError:
+        pass  # a non-integer width such as "*" (local[*]) stays as given
     host = {
         "calib_sec": calib_sec,
         "calib_sec_post": _calibrate(),
@@ -140,7 +145,7 @@ def main() -> None:
         # the driver's 8-core probe read as suspect_cpus_ignored
         # because both artifacts recorded the physical 32).
         "cpus": os.cpu_count(),
-        "cpus_requested": int(_default_cpus()),
+        "cpus_requested": cpus_requested,
         "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     payload = {

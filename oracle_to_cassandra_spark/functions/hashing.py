@@ -17,9 +17,6 @@ source of truth).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 MERSENNE_P = 2147483647  # 2^31 - 1
 
 #: fixed permutation constants (primes), < 2^31
@@ -28,28 +25,17 @@ MINHASH_B = (11, 101, 1009, 10007, 100003, 1000003, 10000019, 100000007)
 N_PERM = len(MINHASH_A)
 
 
-def md5_int64(col: Column) -> Column:
-    """First 15 hex chars of md5 as int64 — exact twin of DuckDB
-    ``('0x' || substr(md5(x), 1, 15))::INT64``."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def md5_int64_sql(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 15))::INT64"
 
 
 def md5_int64_sx(expr: str) -> str:
-    """Spark-SQL string twin of :func:`md5_int64` — same operators,
-    parsed JVM-side in ONE py4j round trip instead of one per Column
-    op. The ``_sx`` family exists purely for plan-construction
-    latency (guide §7.3: very large expression trees built in Python
-    loops spend their time in py4j, not in Spark)."""
+    """First 15 hex chars of md5 as int64 — exact Spark form of DuckDB
+    ``('0x' || substr(md5(x), 1, 15))::INT64``. A Spark-SQL string
+    for ``F.expr``: one parse instead of one py4j round trip per
+    Column node, which is where large expression trees built in
+    Python loops spend their time."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def base31(col: Column) -> Column:
-    """Base hash reduced into [0, p)."""
-    return md5_int64(col) % MERSENNE_P
 
 
 def base31_sql(expr: str) -> str:
@@ -57,13 +43,8 @@ def base31_sql(expr: str) -> str:
 
 
 def base31_sx(expr: str) -> str:
-    """Spark-SQL string twin of :func:`base31`."""
+    """Base hash reduced into [0, p)."""
     return f"({md5_int64_sx(expr)} % {MERSENNE_P})"
-
-
-def perm_hash(h31: Column, i: int) -> Column:
-    """i-th universal-hash permutation of a base-31 hash."""
-    return (h31 * MINHASH_A[i] + MINHASH_B[i]) % MERSENNE_P
 
 
 def perm_hash_sql(h31_expr: str, i: int) -> str:
@@ -71,6 +52,6 @@ def perm_hash_sql(h31_expr: str, i: int) -> str:
 
 
 def perm_hash_sx(h31_expr: str, i: int) -> str:
-    """Spark-SQL string twin of :func:`perm_hash` (same text as the
-    DuckDB form — integer arithmetic parses identically)."""
+    """i-th universal-hash permutation of a base-31 hash (same text as
+    the DuckDB form — integer arithmetic parses identically)."""
     return f"(({h31_expr} * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MERSENNE_P})"

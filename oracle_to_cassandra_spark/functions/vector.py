@@ -6,41 +6,18 @@ The ``embeddings.embedding`` column is ``ArrayType(FloatType)`` (dim
 UDF pickling; elements are cast to double so accumulation matches the
 DuckDB oracle (which is told to cast FLOAT[] → DOUBLE[]).
 
-Scale notes: higher-order array functions run inside codegen'd
-expressions; for very wide vectors (>4k dims) a Pandas UDF over Arrow
-batches with numpy BLAS wins — keep that as the alternate path
-(``cosine_pandas_udf``) but default to built-ins.
+Each function returns a Spark-SQL string for ``F.expr``: the similarity
+operators build dozens of these per query, and one parse replaces the
+~15 per-node py4j round trips a Column composition costs per dot
+product (~50 per cosine).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ in double precision (sequential fold — matches DuckDB's
-    list_dot_product over DOUBLE[])."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
 
 def dot_sx(a: str, b: str) -> str:
-    """Spark-SQL string twin of :func:`dot` — same sequential fold,
-    parsed in one py4j round trip (guide §7.3: the Column composition
-    costs ~15 round trips per use, ~50 per cosine, and the similarity
-    operators build dozens per query)."""
+    """Σ aᵢ·bᵢ in double precision (sequential fold — matches DuckDB's
+    list_dot_product over DOUBLE[])."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -54,21 +31,3 @@ def norm_sx(a: str) -> str:
 
 def cosine_sx(a: str, b: str) -> str:
     return f"({dot_sx(a, b)} / ({norm_sx(a)} * {norm_sx(b)}))"
-
-
-def cosine_pandas_udf():
-    """Arrow-vectorized cosine for the wide-vector path: build lazily
-    so importing this module never requires pandas/numpy at runtime."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        va = np.stack(a.to_numpy())
-        vb = np.stack(b.to_numpy())
-        num = (va * vb).sum(axis=1)
-        den = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-        return pd.Series(num / den)
-
-    return _cos

@@ -74,9 +74,9 @@ def doc_shingle_hashes(
     width-sensitivity audit runs k=3 and k=5 over the same corpus;
     the translate+lower+split chain is ~25% of pipeline wall time
     and must not run per width)."""
-    # tokenize ONCE per row behind a named projection: shingles()
+    # tokenize ONCE per row behind a named projection: shingles_sx()
     # references its token input k times (zip_with slices are
-    # CodegenFallback, no CSE), so inlining tokens() here re-runs the
+    # CodegenFallback, no CSE), so inlining tokens_sx() here re-runs the
     # whole translate+lower+split chain per slice — ~25% of this
     # pipeline's wall time at k=5. CollapseProject keeps a non-cheap
     # multi-referenced alias materialized, so the select is a real

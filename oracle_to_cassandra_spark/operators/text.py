@@ -4,12 +4,15 @@ surface: language-ID, quality scoring, token counting, fingerprinting).
 All hot-path expressions are JVM built-ins (split / higher-order array
 functions / regexp) — no Python UDFs; at 100 TB these run inside
 whole-stage codegen on the scan.
+
+Each ``*_sx`` function returns a Spark-SQL string that callers wrap
+in ``F.expr`` or a ``selectExpr`` term: the JVM parses the whole tree
+in one py4j round trip instead of one round trip per Column node.
+The ``*_sql`` functions are the DuckDB oracle forms of the same
+formulas.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: tiny fixed stopword sets per language for the lang-ID heuristic and
 #: quality scoring (deterministic; mirrored literally into the SQL
@@ -20,7 +23,15 @@ EN_STOPWORDS = ("the", "a", "of", "and", "to")
 BPE_ISH_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def fold_text(text: Column) -> Column:
+def fold_text_py(s: str) -> str:
+    """Python-string form of :func:`fold_text_sx` — CPython's
+    ``str.lower`` applies the same two SpecialCasing rules as the JVM,
+    so UDF/UDTF tokenizers need the same pre-map to stay on the pinned
+    fold."""
+    return s.replace("İ", "i").replace("Σ", "σ").lower()
+
+
+def fold_text_sx(expr: str) -> str:
     """The engine's PINNED case fold: per-codepoint lower-case.
 
     JVM ``toLowerCase`` (root locale) applies exactly two
@@ -43,37 +54,16 @@ def fold_text(text: Column) -> Column:
     the JVM's Unicode version (e.g. U+1C89, Unicode 16) still fold
     differently; they are outside the corpus contract.
 
-    Python twin for UDF/UDTF paths: ``fold_text_py``."""
-    return F.lower(F.translate(text, "İΣ", "iσ"))
-
-
-def fold_text_py(s: str) -> str:
-    """Python-string twin of ``fold_text`` — CPython's ``str.lower``
-    applies the same two SpecialCasing rules as the JVM, so UDF/UDTF
-    tokenizers need the same pre-map to stay on the pinned fold."""
-    return s.replace("İ", "i").replace("Σ", "σ").lower()
-
-
-def fold_text_sx(expr: str) -> str:
-    """Spark-SQL string twin of :func:`fold_text` — same translate+
-    lower chain, parsed JVM-side in one py4j round trip. The ``_sx``
-    family exists for plan-construction latency only (guide §7.3);
-    every ``_sx`` string must parse to the exact expression its
-    Column twin builds."""
+    Python form for UDF/UDTF paths: ``fold_text_py``."""
     return f"lower(translate({expr}, 'İΣ', 'iσ'))"
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization of case-folded text (``fold_text``)."""
-    return F.split(fold_text(text), " ")
-
-
 def tokens_sx(expr: str) -> str:
-    """Spark-SQL string twin of :func:`tokens`."""
+    """Whitespace tokenization of case-folded text (``fold_text_sx``)."""
     return f"split({fold_text_sx(expr)}, ' ')"
 
 
-def shingles(tok: Column, k: int = 3) -> Column:
+def shingles_sx(tok_expr: str, k: int = 3) -> str:
     """k-word shingles — the n-gram unit for MinHash/Jaccard dedup.
     Empty when the doc has fewer than k tokens.
 
@@ -85,26 +75,10 @@ def shingles(tok: Column, k: int = 3) -> Column:
     common-subexpression elimination, so that was O(n²) per document
     (the same trap measured at 4× on bigrams). zip_with pads the
     shorter slice with NULL; ``concat`` propagates the NULL and the
-    final slice to n−k+1 drops those tail elements."""
-    n = F.size(tok)
-    acc = tok
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc,
-            F.slice(tok, j + 1, F.greatest(n - j, F.lit(1))),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        )
-    return F.when(n >= k, F.slice(acc, 1, n - (k - 1))).otherwise(
-        F.array().cast("array<string>")
-    )
+    final slice to n−k+1 drops those tail elements.
 
-
-def shingles_sx(tok_expr: str, k: int = 3) -> str:
-    """Spark-SQL string twin of :func:`shingles` — the identical
-    zip_with fold rendered as one parseable string (``tok_expr``
-    should be a cheap reference, normally a column name: it is
-    spliced ``k+1`` times, exactly as the Column form references its
-    input)."""
+    ``tok_expr`` should be a cheap reference, normally a column name:
+    it is spliced ``k+1`` times."""
     n = f"size({tok_expr})"
     acc = tok_expr
     for j in range(1, k):
@@ -119,7 +93,7 @@ def shingles_sx(tok_expr: str, k: int = 3) -> str:
 
 
 def shingles_sql(tokens_expr: str, k: int = 3) -> str:
-    """DuckDB twin of ``shingles`` (1-based list indexing)."""
+    """DuckDB form of :func:`shingles_sx` (1-based list indexing)."""
     parts = " || ' ' || ".join(f"{tokens_expr}[i+{j}]" for j in range(k))
     return (
         f"list_transform(range(1, greatest(len({tokens_expr}) - {k - 2}, 1)),"
@@ -127,71 +101,11 @@ def shingles_sql(tokens_expr: str, k: int = 3) -> str:
     )
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count via regex runs — the cheap stand-in
-    for a real BPE tokenizer's token count. ``regexp_count`` counts
-    matches without materializing the match array (regexp_extract_all
-    built an ArrayData per row just to take its size)."""
-    return F.regexp_count(fold_text(text), F.lit(BPE_ISH_PATTERN)).cast("int")
-
-
-def stopword_ratio(tok: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    hits = F.size(F.filter(tok, lambda t: t.isin(*stopwords)))
-    return hits / F.greatest(F.size(tok), F.lit(1))
-
-
-def distinct_ratio(tok: Column) -> Column:
-    return F.size(F.array_distinct(tok)) / F.greatest(F.size(tok), F.lit(1))
-
-
-def quality_score(text: Column) -> Column:
-    """Composite quality score ∈ [0,1]: vocabulary diversity +
-    non-stopword density + length credit. Deterministic formula,
-    mirrored in the SQL oracle. Use as a FILTER/RANK key only (both
-    engines evaluate the identical double chain); COMPARE columns
-    must use :func:`quality_micro` — a 6-dp round of this value ties
-    exactly when the token count carries a factor of 2^7 the
-    numerator can't cancel (n = 128, 640, ... — reachable)."""
-    tok = tokens(text)
-    n = F.greatest(F.size(tok), F.lit(1))
-    diversity = F.size(F.array_distinct(tok)) / n
-    non_stop = 1 - stopword_ratio(tok)
-    length_credit = F.least(F.size(tok) / F.lit(100.0), F.lit(1.0))
-    return 0.4 * diversity + 0.4 * non_stop + 0.2 * length_credit
-
-
-def quality_micro(text: Column) -> Column:
-    """EXACT int64 micro-unit quality — the compare-column form of
-    :func:`quality_score`:
-
-        (400000·(d + n − s) + 2000·min(n, 100)·n) div n
-
-    with d = distinct tokens, s = stopword hits, n = max(tokens, 1).
-    Pure integer arithmetic (numerator < 1.1e6·n, far inside int64),
-    identical floor semantics in both engines at any scale."""
-    tok = tokens(text)
-    n = F.greatest(F.size(tok), F.lit(1)).cast("long")
-    d = F.size(F.array_distinct(tok)).cast("long")
-    s = F.size(F.filter(tok, lambda t: t.isin(*EN_STOPWORDS))).cast("long")
-    num = (
-        F.lit(400000) * (d + n - s)
-        + F.lit(2000) * F.least(n, F.lit(100).cast("long")) * n
-    )
-    # (num - num%n) is divisible by n, so the double division is
-    # exact (quotient < 2^53) — equivalent to integer div, works
-    # on Column operands without an F.expr round-trip
-    return ((num - num % n) / n).cast("long")
-
 _SW_IN_SX = "('" + "', '".join(EN_STOPWORDS) + "')"
 
 
 def stopword_ratio_sx(tok_expr: str) -> str:
-    """Spark-SQL string twin of :func:`stopword_ratio` (default
-    stopword set)."""
+    """Share of tokens in the default stopword set."""
     return (
         f"(size(filter({tok_expr}, t -> t IN {_SW_IN_SX})) / "
         f"greatest(size({tok_expr}), 1))"
@@ -199,10 +113,14 @@ def stopword_ratio_sx(tok_expr: str) -> str:
 
 
 def quality_score_sx(text_expr: str) -> str:
-    """Spark-SQL string twin of :func:`quality_score` — identical
-    operator tree (double literals carry the ``D`` suffix so they
-    parse as DOUBLE, matching ``F.lit(float)``), one parse round trip
-    instead of ~60 Column compositions."""
+    """Composite quality score ∈ [0,1]: vocabulary diversity +
+    non-stopword density + length credit. Deterministic formula,
+    mirrored in the SQL oracle (double literals carry the ``D`` suffix
+    so they parse as DOUBLE). Use as a FILTER/RANK key only (both
+    engines evaluate the identical double chain); COMPARE columns
+    must use :func:`quality_micro_sx` — a 6-dp round of this value
+    ties exactly when the token count carries a factor of 2^7 the
+    numerator can't cancel (n = 128, 640, ... — reachable)."""
     tok = tokens_sx(text_expr)
     n = f"greatest(size({tok}), 1)"
     diversity = f"(size(array_distinct({tok})) / {n})"
@@ -213,9 +131,16 @@ def quality_score_sx(text_expr: str) -> str:
 
 
 def quality_micro_sx(text_expr: str) -> str:
-    """Spark-SQL string twin of :func:`quality_micro` (same exact
-    integer arithmetic; the double division is exact because the
-    numerator is first rounded down to a multiple of n)."""
+    """EXACT int64 micro-unit quality — the compare-column form of
+    :func:`quality_score_sx`:
+
+        (400000·(d + n − s) + 2000·min(n, 100)·n) div n
+
+    with d = distinct tokens, s = stopword hits, n = max(tokens, 1).
+    Pure integer arithmetic (numerator < 1.1e6·n, far inside int64),
+    identical floor semantics in both engines at any scale. The
+    numerator is first rounded down to a multiple of n, so the double
+    division is exact (quotient < 2^53)."""
     tok = tokens_sx(text_expr)
     n = f"CAST(greatest(size({tok}), 1) AS BIGINT)"
     d = f"CAST(size(array_distinct({tok})) AS BIGINT)"
@@ -225,33 +150,11 @@ def quality_micro_sx(text_expr: str) -> str:
 
 
 def quality_micro_sql(tok_sql: str, sw_sql: str) -> str:
-    """DuckDB twin of :func:`quality_micro`."""
+    """DuckDB form of :func:`quality_micro_sx`."""
     n = f"greatest(len({tok_sql}), 1)"
     d = f"len(list_distinct({tok_sql}))"
     s = f"len(list_filter({tok_sql}, t -> t IN {sw_sql}))"
     return (
         f"((400000 * ({d} + {n} - {s})"
         f" + 2000 * least({n}, 100) * {n}) // {n})"
-    )
-
-
-def sorted_token_fingerprint(text: Column) -> Column:
-    """Order-insensitive document fingerprint: md5 of the sorted
-    distinct token list — the classic near-dup *key collision*
-    fingerprint (docs that are permutations of the same vocabulary
-    collide)."""
-    return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(text))), " "))
-
-
-def rolling_token_hash(text: Column) -> Column:
-    """Polynomial rolling hash folded over the token stream —
-    order-SENSITIVE fingerprint (vs the sorted fingerprint above).
-    acc = (acc·31 + h31(token)) mod p; sequential fold, exact in both
-    engines (acc·31 + h < 2³⁶)."""
-    from oracle_to_cassandra_spark.functions.hashing import MERSENNE_P, base31
-
-    return F.aggregate(
-        tokens(text),
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * 31 + base31(t)) % MERSENNE_P,
     )

@@ -113,7 +113,7 @@ def bpe_train_merges(spark, sf_dir):
     select pairs containing previously merged symbols."""
     d = load_table(spark, sf_dir, "documents")
     vocab = (
-        d.select(F.explode(TX.tokens(F.col("text"))).alias("w"))
+        d.select(F.explode(F.expr(TX.tokens_sx("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
     )
@@ -230,7 +230,7 @@ def bpe_apply_tokenize(spark, sf_dir):
     aggregate."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("w")
+        "doc_id", F.explode(F.expr(TX.tokens_sx("text"))).alias("w")
     )
     vocab = tok.groupBy("w").agg(F.count("*").alias("freq"))
     words = stage(vocab.select("w", "freq", F.expr(_CHARS_FOLD).alias("sym")))

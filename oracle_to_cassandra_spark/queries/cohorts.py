@@ -158,11 +158,11 @@ def ab_assignment_srm_check(spark, sf_dir):
     Scale: distinct-user aggregation (map-side combined) then a
     2-row report; assignment is pure hash arithmetic at scan speed,
     usable as-is as the join key for exposure logging."""
-    from oracle_to_cassandra_spark.functions.hashing import md5_int64
+    from oracle_to_cassandra_spark.functions.hashing import md5_int64_sx
 
     ev = load_table(spark, sf_dir, "events")
     arm = F.when(
-        md5_int64(F.concat(F.lit("exp1:"), F.col("user_id").cast("string"))) % 2
+        F.expr(md5_int64_sx("concat('exp1:', CAST(user_id AS STRING))")) % 2
         == 0,
         "A",
     ).otherwise("B")

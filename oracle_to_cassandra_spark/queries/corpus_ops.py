@@ -16,12 +16,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.functions.hashing import base31, base31_sql, base31_sx
+from oracle_to_cassandra_spark.functions.hashing import base31_sql, base31_sx
 from oracle_to_cassandra_spark.operators.dedup import (
     doc_shingle_hashes,
     doc_shingle_hashes_sql,
 )
-from oracle_to_cassandra_spark.operators.text import shingles, shingles_sql, tokens
+from oracle_to_cassandra_spark.operators.text import shingles_sql, shingles_sx, tokens_sx
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.staging import stage
 from oracle_to_cassandra_spark.sources import load_table
@@ -83,9 +83,9 @@ def doc_repetition_stats(spark, sf_dir):
     bigrams."""
     d = load_table(spark, sf_dir, "documents")
     # tokenize once behind a named projection (evaluation barrier) —
-    # shingles() and the two size() consumers would otherwise each
+    # shingles_sx() and the two size() consumers would otherwise each
     # re-run the fold+split chain (see operators/dedup.py note)
-    toked = d.select("doc_id", tokens(F.col("text")).alias("__tok"))
+    toked = d.select("doc_id", F.expr(tokens_sx("text")).alias("__tok"))
     tok = F.col("__tok")
     word_stats = toked.select(
         "doc_id",
@@ -93,7 +93,7 @@ def doc_repetition_stats(spark, sf_dir):
         F.size(F.array_distinct(tok)).cast("long").alias("n_distinct"),
     )
     bg = toked.select(
-        "doc_id", F.explode(shingles(tok, 2)).alias("bigram")
+        "doc_id", F.explode(F.expr(shingles_sx("__tok", 2))).alias("bigram")
     )
     bg_stats = (
         bg.groupBy("doc_id", "bigram")
@@ -289,7 +289,7 @@ def corpus_mixture_weights(spark, sf_dir):
     broadcast of the 1-row total — the 100 TB scan is touched exactly
     once."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokens(F.col("text"))).cast("long")
+    n_tok = F.size(F.expr(tokens_sx("text"))).cast("long")
     per_source = d.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum(n_tok).alias("n_tokens")
     )
@@ -362,7 +362,7 @@ def mixture_weighted_sample(spark, sf_dir):
     pass 2 streams the corpus once against the broadcast weights —
     accept/reject is map-side, no shuffle until the audit counts."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokens(F.col("text"))).cast("double")
+    n_tok = F.size(F.expr(tokens_sx("text"))).cast("double")
     per_source = d.groupBy("source").agg(F.sum(n_tok).alias("n_tokens"))
     tot = per_source.agg(
         F.sum("n_tokens").alias("all_tokens"),
@@ -384,7 +384,7 @@ def mixture_weighted_sample(spark, sf_dir):
     w = stage(w)
     m = w.agg(F.max("weight").alias("max_w"))
     u = (
-        base31(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))) % 1000000
+        F.expr(base31_sx("concat('mix:', CAST(doc_id AS STRING))")) % 1000000
     ) / 1000000.0
     return (
         d.join(F.broadcast(w), "source")
@@ -445,7 +445,7 @@ def temperature_mixture_weights(spark, sf_dir):
     broadcast 1-row totals — the corpus scan happens once; the output
     is sources-sized."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokens(F.col("text"))).cast("long")
+    n_tok = F.size(F.expr(tokens_sx("text"))).cast("long")
     per_source = d.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum(n_tok).alias("n_tokens")
     )
@@ -515,12 +515,10 @@ def epoch_reshuffle_prefix_overlap(spark, sf_dir):
     keyed = d.crossJoin(F.broadcast(epochs)).select(
         "epoch",
         "doc_id",
-        base31(
-            F.concat(
-                F.lit("epoch:"),
-                F.col("epoch").cast("string"),
-                F.lit(":"),
-                F.col("doc_id").cast("string"),
+        F.expr(
+            base31_sx(
+                "concat('epoch:', CAST(epoch AS STRING), ':', "
+                "CAST(doc_id AS STRING))"
             )
         ).alias("h"),
     )
@@ -595,7 +593,7 @@ def token_budget_apportionment(spark, sf_dir):
     arithmetic over a sources-sized table); the remainder ranking is
     a window over that tiny table."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokens(F.col("text"))).cast("long")
+    n_tok = F.size(F.expr(tokens_sx("text"))).cast("long")
     per_source = stage(
         d.groupBy("source").agg(F.sum(n_tok).alias("n_tokens"))
     )

@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 
 from oracle_to_cassandra_spark.operators.text import (
     EN_STOPWORDS,
-    fold_text,
+    fold_text_sx,
     quality_micro_sql,
     quality_micro_sx,
-    tokens,
+    tokens_sx,
 )
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.sources import load_table
@@ -155,7 +155,7 @@ def duplicate_span_stats(spark, sf_dir):
     reference's Scala examples use for column math
     (`/root/reference/README.md:592-607`) — declarative, no UDF."""
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", tokens(F.col("text")).alias("ws"))
+    w = d.select("doc_id", F.expr(tokens_sx("text")).alias("ws"))
     segs = w.select(
         "doc_id",
         F.explode(
@@ -221,7 +221,7 @@ def oov_rate_top_vocab(spark, sf_dir):
     strings twice. In production the vocab table is the tokenizer's
     real vocab file loaded once."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens_sx("text"))).alias("t"))
     vocab = (
         tok.groupBy("t")
         .agg(F.count("*").alias("c"))
@@ -254,14 +254,14 @@ MIN_DIVERSITY = 0.45
 MIN_STOPWORDS = 2
 
 
-def gopher_rule_flags(text_col) -> dict:
-    """The four Gopher rule expressions over a raw text Column — the
-    ONE Spark-side rule battery. Both the batch report
-    (``gopher_quality_rules``) and the streaming gate
+def gopher_rule_flags(text: str) -> dict:
+    """The four Gopher rule expressions over a raw text SQL expression
+    (normally a column name) — the ONE Spark-side rule battery. Both
+    the batch report (``gopher_quality_rules``) and the streaming gate
     (``stream_gopher_quality_gate``) compose from these flags, so an
     expression-form fix (e.g. a tokenizer-fold change) propagates to
     every consumer instead of silently forking the twins."""
-    ts = tokens(text_col)
+    ts = F.expr(tokens_sx(text))
     mwl = F.aggregate(
         F.transform(ts, F.length),
         F.lit(0.0),
@@ -280,9 +280,9 @@ def gopher_rule_flags(text_col) -> dict:
     }
 
 
-def gopher_pass_expr(text_col):
+def gopher_pass_expr(text: str):
     """AND of all four rules — the keep/drop gate expression."""
-    flags = gopher_rule_flags(text_col)
+    flags = gopher_rule_flags(text)
     return flags["r_len"] & flags["r_mwl"] & flags["r_div"] & flags["r_stop"]
 
 
@@ -366,7 +366,7 @@ def gopher_quality_rules(spark, sf_dir):
     (`/root/reference/README.md:877`) to the rule-report shape its
     WHERE-clause examples cannot express without N passes."""
     d = load_table(spark, sf_dir, "documents")
-    flags = gopher_rule_flags(F.col("text"))
+    flags = gopher_rule_flags("text")
     rules = d.select(
         "source", *[expr.alias(name) for name, expr in flags.items()]
     )
@@ -621,18 +621,14 @@ def text_normalization_stats(spark, sf_dir):
     columnar next to the raw, versioned by the normalizer config
     hash."""
     d = load_table(spark, sf_dir, "documents")
-    dirty = F.concat(
-        F.col("text"),
-        F.lit("  "),
-        F.upper("source"),
-        F.expr("char(9)"),
-        F.lit(" MiXeD"),
-        F.expr("repeat(' ', cast(doc_id % 4 AS INT) + 2)"),
-        F.lit("TaIl "),
+    dirty_sx = (
+        "concat(text, '  ', upper(source), char(9), ' MiXeD', "
+        "repeat(' ', cast(doc_id % 4 AS INT) + 2), 'TaIl ')"
     )
+    dirty = F.expr(dirty_sx)
     clean = F.trim(
         F.regexp_replace(
-            F.replace(fold_text(dirty), F.expr("char(9)"), F.lit(" ")),
+            F.replace(F.expr(fold_text_sx(dirty_sx)), F.expr("char(9)"), F.lit(" ")),
             " +",
             " ",
         )
@@ -679,7 +675,7 @@ def observed_ingest_metrics(spark, sf_dir):
     from pyspark.sql import Observation
 
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokens(F.col("text")))
+    n_tok = F.size(F.expr(tokens_sx("text")))
     obs = Observation("ingest_funnel")
     observed = d.observe(
         obs,

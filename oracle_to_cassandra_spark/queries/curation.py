@@ -423,9 +423,12 @@ def curation_pipeline_v2(spark, sf_dir):
     keys; the floor is a 1-row broadcast; the split tag is hash
     arithmetic. One corpus-sized shuffle total (the dedup), which is
     the information-theoretic minimum for exact dedup."""
-    from oracle_to_cassandra_spark.functions.hashing import base31
-    from oracle_to_cassandra_spark.operators.text import EN_STOPWORDS, tokens
-    from oracle_to_cassandra_spark.operators.text import quality_micro_sx
+    from oracle_to_cassandra_spark.functions.hashing import base31_sx
+    from oracle_to_cassandra_spark.operators.text import (
+        EN_STOPWORDS,
+        quality_micro_sx,
+        tokens_sx,
+    )
     from oracle_to_cassandra_spark.queries.corpus_quality import (
         MIN_DIVERSITY,
         MIN_STOPWORDS,
@@ -435,7 +438,7 @@ def curation_pipeline_v2(spark, sf_dir):
     )
 
     d = load_table(spark, sf_dir, "documents")
-    ts = tokens(F.col("text"))
+    ts = F.expr(tokens_sx("text"))
     mwl = F.aggregate(
         F.transform(ts, F.length), F.lit(0.0), lambda a, x: a + x
     ) / F.size(ts)
@@ -469,7 +472,7 @@ def curation_pipeline_v2(spark, sf_dir):
     kept = deduped.crossJoin(F.broadcast(floor_q)).filter(
         F.col("q_micro") >= F.col("q20")
     )
-    h = base31(F.col("doc_id").cast("string")) % 10
+    h = F.expr(base31_sx("CAST(doc_id AS STRING)")) % 10
     split = (
         F.when(h < 8, "train").when(h == 8, "val").otherwise("test")
     )

@@ -78,7 +78,7 @@ def dataset_card_per_source(spark, sf_dir):
     language with its share — the summary table a data-governance
     review reads before a corpus ships to training."""
     d = load_table(spark, sf_dir, "documents")
-    tok = TX.tokens(F.col("text"))
+    tok = F.expr(TX.tokens_sx("text"))
     per_doc = d.select(
         "doc_id",
         "source",
@@ -186,7 +186,7 @@ def token_length_psi_drift(spark, sf_dir):
     identical smoothed-ratio expression, so ln() operand equality
     makes the rounded terms match."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.col("text")))
+    n_tok = F.size(F.expr(TX.tokens_sx("text")))
     tagged = d.select(
         F.least(F.floor(n_tok / 10), F.lit(_PSI_BUCKETS - 1)).alias("bucket"),
         (F.col("doc_id") % 10 == _NEW_MOD).alias("is_new"),
@@ -260,7 +260,7 @@ def quality_length_regression_per_source(spark, sf_dir):
     second-moment sums whose cross-engine difference is bounded by
     accumulation order at ~1e-12 relative."""
     d = load_table(spark, sf_dir, "documents")
-    x = F.size(TX.tokens(F.col("text"))).cast("double")
+    x = F.size(F.expr(TX.tokens_sx("text"))).cast("double")
     # y in exact integer micro-quality (as double): the per-row
     # round(q, 6) form ties at uncancelled 2^7 token counts; slope/
     # intercept simply scale by 1e6, R² is scale-invariant
@@ -323,7 +323,7 @@ def corpus_snapshot_delta(spark, sf_dir):
     tagged = d.select(
         "source",
         F.md5("text").alias("h"),
-        F.size(TX.tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        F.size(F.expr(TX.tokens_sx("text"))).cast("long").alias("n_tokens"),
         (F.col("doc_id") % 10 == _NEW_MOD).alias("is_new"),
     )
     snap = tagged.filter(~F.col("is_new")).select("h").distinct().withColumn(

@@ -543,11 +543,11 @@ def shingle_width_sensitivity(spark, sf_dir):
     is staged once and passed into each ``doc_shingle_hashes`` (r13,
     guide §2.4 — the translate+lower+split chain is ~25% of pipeline
     wall time and ran once per width before)."""
-    from oracle_to_cassandra_spark.operators.text import tokens
+    from oracle_to_cassandra_spark.operators.text import tokens_sx
 
     docs = load_table(spark, sf_dir, "documents")
     toked = stage(
-        docs.select("doc_id", tokens(F.col("text")).alias("__tok"))
+        docs.select("doc_id", F.expr(tokens_sx("text")).alias("__tok"))
     )
     p3 = stage(
         D.jaccard_verified_pairs(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.functions.hashing import md5_int64, md5_int64_sql
+from oracle_to_cassandra_spark.functions.hashing import md5_int64_sql, md5_int64_sx
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.sources import load_table
 from oracle_to_cassandra_spark.staging import stage
@@ -91,7 +91,7 @@ def migration_bucket_reconciliation(spark, sf_dir):
     )
 
     def bucket_digest(df, n_name, h_name):
-        row_h = md5_int64(F.expr(_ROW_EXPR))
+        row_h = F.expr(md5_int64_sx(_ROW_EXPR))
         return df.groupBy(
             (F.col("o_orderkey") % _N_BUCKETS).alias("bucket")
         ).agg(
@@ -731,14 +731,12 @@ def merge_upsert_apply(spark, sf_dir):
         F.count(F.when(F.col("op") == "D", 1)).alias("n_deleted"),
         F.count(F.when(F.col("op") == "U", 1)).alias("n_updated"),
     )
-    digest_row = F.concat(
-        F.col("o_orderkey").cast("string"),
-        F.lit("|"),
-        F.col("price_cents").cast("string"),
+    digest_row = (
+        "concat(CAST(o_orderkey AS STRING), '|', CAST(price_cents AS STRING))"
     )
     return merged.agg(
         F.count("*").alias("n_rows_after"),
-        F.bit_xor(md5_int64(digest_row)).alias("content_digest"),
+        F.bit_xor(F.expr(md5_int64_sx(digest_row))).alias("content_digest"),
     ).crossJoin(F.broadcast(n_ops)).select(
         "n_rows_after", "n_deleted", "n_updated", "content_digest"
     )

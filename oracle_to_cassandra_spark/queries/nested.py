@@ -87,7 +87,7 @@ def map_construction_lookup(spark, sf_dir):
     return ev.select(
         "event_id",
         "event_type",
-        F.coalesce(weights.getItem(F.col("event_type")), F.lit(0)).alias("weight"),
+        F.coalesce(weights[F.col("event_type")], F.lit(0)).alias("weight"),
     )
 
 

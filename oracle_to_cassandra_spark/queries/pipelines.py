@@ -224,7 +224,7 @@ def format_roundtrip_digest(spark, sf_dir):
     from concurrent.futures import ThreadPoolExecutor
 
     from oracle_to_cassandra_spark import scratch
-    from oracle_to_cassandra_spark.functions.hashing import md5_int64, md5_int64_sql
+    from oracle_to_cassandra_spark.functions.hashing import md5_int64_sx
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -265,14 +265,14 @@ def format_roundtrip_digest(spark, sf_dir):
             ).json(path)
         else:  # columnar-binary member of the interchange set
             back = spark.read.orc(path)
-        row = F.concat_ws(
-            "|", F.col("o_orderkey").cast("string"), "o_orderstatus",
-            "o_orderpriority", "price_s",
+        row = (
+            "concat_ws('|', CAST(o_orderkey AS STRING), o_orderstatus, "
+            "o_orderpriority, price_s)"
         )
         out.append(
             back.agg(
                 F.count("*").alias("n_rows"),
-                F.bit_xor(md5_int64(row)).alias("digest"),
+                F.bit_xor(F.expr(md5_int64_sx(row))).alias("digest"),
             ).select(F.lit(fmt).alias("fmt"), "n_rows", "digest")
         )
     res = out[0]

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.functions.hashing import base31, base31_sql
+from oracle_to_cassandra_spark.functions.hashing import base31_sql, base31_sx
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.sources import load_table
 
@@ -28,7 +28,7 @@ def hash_systematic_sample(spark, sf_dir):
     seed-based sampling; the standard trick for stable eval holdouts."""
     d = load_table(spark, sf_dir, "documents")
     return d.filter(
-        base31(F.col("doc_id").cast("string")) % 20 == 0
+        F.expr(base31_sx("CAST(doc_id AS STRING)")) % 20 == 0
     ).select("doc_id", "lang", "n_chars")
 
 
@@ -103,7 +103,7 @@ def stratified_quota_sample(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(
-        base31(F.col("doc_id").cast("string")), F.col("doc_id")
+        F.expr(base31_sx("CAST(doc_id AS STRING)")), F.col("doc_id")
     )
     return (
         d.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -149,14 +149,14 @@ def weighted_sample_without_replacement(spark, sf_dir):
     distributed top-k (TakeOrderedAndProject), never a global sort;
     ties in the 6-dp-rounded key break on doc_id so both engines
     rank identically."""
-    from oracle_to_cassandra_spark.functions.hashing import md5_int64
-    from oracle_to_cassandra_spark.operators.text import tokens
+    from oracle_to_cassandra_spark.functions.hashing import md5_int64_sx
+    from oracle_to_cassandra_spark.operators.text import tokens_sx
 
     d = load_table(spark, sf_dir, "documents")
-    ts = tokens(F.col("text"))
+    ts = F.expr(tokens_sx("text"))
     w = F.size(F.array_distinct(ts)) / F.greatest(F.size(ts), F.lit(1))
     u = (
-        md5_int64(F.concat(F.lit("wswr:"), F.col("doc_id").cast("string")))
+        F.expr(md5_int64_sx("concat('wswr:', CAST(doc_id AS STRING))"))
         % 1000000
         + 1
     ) / 1000001.0

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from oracle_to_cassandra_spark import scratch
 from oracle_to_cassandra_spark.operators.scale import write_bucketed_table
 from oracle_to_cassandra_spark.registry import query
+from oracle_to_cassandra_spark.session import scoped_conf
 from oracle_to_cassandra_spark.staging import stage
 from oracle_to_cassandra_spark.sources import load_table
 
@@ -203,14 +204,8 @@ def runtime_bloom_filtered_join(spark, sf_dir):
     The returned frame is the staged copy (``staging.stage``) of the tiny (3-row)
     aggregate; tests/test_plan_shape.py asserts might_contain on the
     pre-materialization plan."""
-    prev = {k: spark.conf.get(k) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         return stage(_bloom_join_plan(spark, sf_dir), eager=True)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 @query(

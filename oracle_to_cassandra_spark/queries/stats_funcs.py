@@ -345,17 +345,17 @@ def cms_heavy_hitters(spark, sf_dir):
     Scale: the sketch is 4×1024 cells regardless of input size and is
     broadcast to the probe join; the exact top-k side uses
     sort+limit (TakeOrderedAndProject), never a global sort."""
-    from oracle_to_cassandra_spark.functions.hashing import base31, perm_hash
+    from oracle_to_cassandra_spark.functions.hashing import base31_sx, perm_hash_sx
 
     orders = load_table(spark, sf_dir, "orders")
-    h = base31(F.col("o_custkey").cast("string"))
+    h = base31_sx("CAST(o_custkey AS STRING)")
     cells = orders.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        (perm_hash(h, i) % _CMS_W).alias("b"),
+                        (F.expr(perm_hash_sx(h, i)) % _CMS_W).alias("b"),
                     )
                     for i in range(_CMS_D)
                 ]
@@ -372,7 +372,6 @@ def cms_heavy_hitters(spark, sf_dir):
         .orderBy(F.desc("n_exact"), F.asc("o_custkey"))
         .limit(_CMS_TOPK)
     )
-    th = base31(F.col("o_custkey").cast("string"))
     probes = top.select(
         "o_custkey",
         "n_exact",
@@ -381,7 +380,7 @@ def cms_heavy_hitters(spark, sf_dir):
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        (perm_hash(th, i) % _CMS_W).alias("b"),
+                        (F.expr(perm_hash_sx(h, i)) % _CMS_W).alias("b"),
                     )
                     for i in range(_CMS_D)
                 ]
@@ -518,19 +517,17 @@ def bootstrap_replicate_means(spark, sf_dir):
     sums per partition (the cross join with the replicate spine is a
     broadcast of 8 rows); this is how bootstrap CIs are computed on
     100 TB without materializing a single resample."""
-    from oracle_to_cassandra_spark.functions.hashing import md5_int64
+    from oracle_to_cassandra_spark.functions.hashing import md5_int64_sx
     from oracle_to_cassandra_spark.operators.text import quality_micro_sx
 
     d = load_table(spark, sf_dir, "documents")
     reps = spark.range(_BOOT_B).select(
         F.col("id").cast("long").alias("replicate_id")
     )
-    u = md5_int64(
-        F.concat(
-            F.lit("boot:"),
-            F.col("replicate_id").cast("string"),
-            F.lit(":"),
-            F.col("doc_id").cast("string"),
+    u = F.expr(
+        md5_int64_sx(
+            "concat('boot:', CAST(replicate_id AS STRING), ':', "
+            "CAST(doc_id AS STRING))"
         )
     ) % 1000000
     cnt = F.lit(7)
@@ -539,7 +536,7 @@ def bootstrap_replicate_means(spark, sf_dir):
     draws = (
         d.select(
             "doc_id",
-            # exact integer micro-quality (operators/text.quality_micro)
+            # exact integer micro-quality (operators/text.quality_micro_sx)
             # — a per-row round of q*1e6 ties at the half whenever the
             # token count carries an uncancelled factor of 2
             F.expr(quality_micro_sx("text")).alias("q_micro"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from oracle_to_cassandra_spark.registry import query
+from oracle_to_cassandra_spark.session import scoped_conf
 from oracle_to_cassandra_spark.streaming import (
     JOIN_STATE_PARTITIONS,
     pandas_state_partitions,
@@ -639,7 +640,7 @@ def stream_gopher_quality_gate(spark, sf_dir):
     )
     # the SAME rule-battery expression as the batch report — shared
     # builder, so an expression fix propagates to both twins
-    pass_all = gopher_pass_expr(F.col("text"))
+    pass_all = gopher_pass_expr("text")
     agg = (
         docs.select("source", pass_all.cast("int").alias("ok"))
         .groupBy("source")
@@ -860,17 +861,12 @@ def stream_rocksdb_state_aggregate(spark, sf_dir):
     scoped to this query's start and restored afterwards (a streaming
     query pins its provider at first start, so the conf round-trip
     cannot leak into sibling streams)."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming."
+            "state.RocksDBStateStoreProvider",
+    }
+    with scoped_conf(spark, rocksdb):
         ev = read_events_stream(spark, sf_dir)
         agg = ev.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
@@ -880,8 +876,6 @@ def stream_rocksdb_state_aggregate(spark, sf_dir):
         )
         return run_stream_to_memory(agg, output_mode="complete",
                                     state_partitions=8)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def _session_expiry_oracle() -> str:

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.functions.hashing import MERSENNE_P, base31_sql
+from oracle_to_cassandra_spark.functions.hashing import MERSENNE_P, base31_sql, base31_sx
 from oracle_to_cassandra_spark.operators import text as TX
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.staging import stage
@@ -48,8 +48,12 @@ def token_counts_documents(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        TX.token_count(F.col("text")).alias("n_tokens"),
-        TX.bpe_ish_token_count(F.col("text")).alias("n_bpe_ish"),
+        F.size(F.expr(TX.tokens_sx("text"))).alias("n_tokens"),
+        # regexp_count counts matches without materializing the match
+        # array (regexp_extract_all built an ArrayData per row)
+        F.regexp_count(F.expr(TX.fold_text_sx("text")), F.lit(TX.BPE_ISH_PATTERN))
+        .cast("int")
+        .alias("n_bpe_ish"),
         F.length("text").alias("n_chars"),
     )
 
@@ -74,7 +78,7 @@ def quality_scores_documents(spark, sf_dir):
     the half-micro for token counts with an uncancelled 2^7 factor,
     and the engines round such ties differently."""
     d = load_table(spark, sf_dir, "documents")
-    tok = TX.tokens(F.col("text"))
+    tok = F.expr(TX.tokens_sx("text"))
     n = F.greatest(F.size(tok), F.lit(1)).cast("long")
     return d.select(
         "doc_id",
@@ -88,7 +92,7 @@ def quality_scores_documents(spark, sf_dir):
              * 1000000) % n) / n)
         .cast("long")
         .alias("stop_ratio_ppm"),
-        TX.quality_micro(F.col("text")).alias("quality_micro"),
+        F.expr(TX.quality_micro_sx("text")).alias("quality_micro"),
     )
 
 
@@ -108,11 +112,12 @@ def lang_id_heuristic(spark, sf_dir):
     corpus is English-vocabulary with random ``lang`` labels, so the
     value here is the deterministic operator shape, not accuracy."""
     d = load_table(spark, sf_dir, "documents")
-    tok = TX.tokens(F.col("text"))
     return d.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        F.when(TX.stopword_ratio(tok) > 0.05, "en").otherwise("other").alias("predicted_lang"),
+        F.when(F.expr(TX.stopword_ratio_sx(TX.tokens_sx("text"))) > 0.05, "en")
+        .otherwise("other")
+        .alias("predicted_lang"),
     )
 
 
@@ -135,10 +140,17 @@ def fingerprint_documents(spark, sf_dir):
     polynomial rolling hash — exact cross-engine integer arithmetic
     (see functions/hashing.py)."""
     d = load_table(spark, sf_dir, "documents")
+    tok = TX.tokens_sx("text")
     return d.select(
         "doc_id",
-        TX.sorted_token_fingerprint(F.col("text")).alias("vocab_fingerprint"),
-        TX.rolling_token_hash(F.col("text")).alias("rolling_hash"),
+        F.md5(F.array_join(F.array_sort(F.array_distinct(F.expr(tok))), " "))
+        .alias("vocab_fingerprint"),
+        # acc = (acc·31 + h31(token)) mod p: a sequential fold, exact in
+        # both engines (acc·31 + h < 2³⁶)
+        F.expr(
+            f"aggregate({tok}, CAST(0 AS BIGINT), "
+            f"(acc, t) -> (acc * 31 + {base31_sx('t')}) % {MERSENNE_P})"
+        ).alias("rolling_hash"),
     )
 
 
@@ -190,7 +202,7 @@ def inverted_index_postings(spark, sf_dir):
     map task emits one row per distinct token, so the shuffle carries
     vocabulary-sized data, not corpus-sized."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("token"))
+    tok = d.select("doc_id", F.explode(F.expr(TX.tokens_sx("text"))).alias("token"))
     return (
         tok.groupBy("token")
         .agg(
@@ -275,7 +287,7 @@ def bm25_retrieval_topk(spark, sf_dir):
     fires)."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("t")
+        "doc_id", F.explode(F.expr(TX.tokens_sx("text"))).alias("t")
     )
     tok = stage(tok)
     doclen = tok.groupBy("doc_id").agg(F.count("*").cast("double").alias("dl"))
@@ -352,7 +364,7 @@ def bpe_merge_candidates(spark, sf_dir):
     20-row rank window."""
     d = load_table(spark, sf_dir, "documents")
     pairs = (
-        d.select(F.explode(TX.tokens(F.col("text"))).alias("w"))
+        d.select(F.explode(F.expr(TX.tokens_sx("text"))).alias("w"))
         # single-char words carry no pair — and guard BEFORE sequence():
         # Spark's sequence(0, -1) helpfully counts DOWN, which would
         # fabricate phantom pairs for them
@@ -419,20 +431,17 @@ def oov_bigram_novelty(spark, sf_dir):
     (distributed partial top-K per partition, then a {_NOV_VOCAB_K}-row
     sort) and broadcasts into the membership probe, so the per-doc
     pass is scan + broadcast-hash-probe + one keyed aggregate."""
-    from oracle_to_cassandra_spark.functions.hashing import base31
-
     d = load_table(spark, sf_dir, "documents")
     # tokenize once behind a projection barrier (operators/dedup.py)
-    toked = d.select("doc_id", TX.tokens(F.col("text")).alias("__tok"))
+    toked = d.select("doc_id", F.expr(TX.tokens_sx("text")).alias("__tok"))
     tok = F.col("__tok")
+    h31 = base31_sx("concat('bg:', b)")
     bg = (
         toked.filter(F.size(tok) >= 2)
         .select(
             "doc_id",
             F.explode(
-                F.transform(
-                    TX.shingles(tok, 2), lambda b: base31(F.concat(F.lit("bg:"), b))
-                )
+                F.expr(f"transform({TX.shingles_sx('__tok', 2)}, b -> {h31})")
             ).alias("h"),
         )
     )
@@ -502,7 +511,7 @@ def unigram_cross_entropy_per_source(spark, sf_dir):
     shuffles at corpus scale except the vocabulary count itself."""
     d = load_table(spark, sf_dir, "documents")
     tok = stage(
-        d.select("source", F.explode(TX.tokens(F.col("text"))).alias("w"))
+        d.select("source", F.explode(F.expr(TX.tokens_sx("text"))).alias("w"))
     )
     lm = tok.groupBy("w").agg(F.count("*").alias("n_w"))
     total = lm.agg(F.sum("n_w").cast("double").alias("n_total"))
@@ -564,7 +573,7 @@ def vocab_coverage_curve(spark, sf_dir):
     the token total is a separate map-side-combinable sum. Only the
     bounded top set and two scalars move."""
     d = load_table(spark, sf_dir, "documents")
-    tok = stage(d.select(F.explode(TX.tokens(F.col("text"))).alias("w")))
+    tok = stage(d.select(F.explode(F.expr(TX.tokens_sx("text"))).alias("w")))
     vocab = tok.groupBy("w").agg(F.count("*").alias("n_w"))
     total = tok.agg(F.count("*").cast("long").alias("n_total"))
     # rank only the top-10000 (distributed TakeOrdered), then window
@@ -696,7 +705,7 @@ def bm25_self_retrieval_mrr(spark, sf_dir):
     queries report scores, this reports QUALITY."""
     d = load_table(spark, sf_dir, "documents")
     tok = stage(
-        d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("t"))
+        d.select("doc_id", F.explode(F.expr(TX.tokens_sx("text"))).alias("t"))
     )
     doclen = tok.groupBy("doc_id").agg(F.count("*").cast("double").alias("dl"))
     stats = doclen.agg(
@@ -707,7 +716,7 @@ def bm25_self_retrieval_mrr(spark, sf_dir):
     qterms = (
         probes.select(
             F.col("doc_id").alias("query_id"),
-            F.slice(F.array_distinct(TX.tokens(F.col("text"))), 1, 3).alias(
+            F.slice(F.array_distinct(F.expr(TX.tokens_sx("text"))), 1, 3).alias(
                 "ts"
             ),
         )

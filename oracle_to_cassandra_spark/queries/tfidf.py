@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.operators.text import shingles, tokens
 from oracle_to_cassandra_spark.operators import text as TX
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.sources import load_table
@@ -53,7 +52,7 @@ def tfidf_top_terms(spark, sf_dir):
     df join. Three exchanges total, all on the compact tf relation."""
     docs = load_table(spark, sf_dir, "documents")
     tokens = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(F.expr(TX.tokens_sx("text"))).alias("term")
     )
     tf = tokens.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
@@ -99,7 +98,7 @@ def top_bigrams_corpus(spark, sf_dir):
     while a per-document rate holds the output at vocabulary scale
     across any corpus size.
 
-    Plan note: bigrams are ``shingles(tok, k=2)`` — the zip_with fold
+    Plan note: bigrams are ``shingles_sx(tok, k=2)`` — the zip_with fold
     that evaluates the split array a constant number of times per ROW.
     The earlier ``transform(idx, i -> element_at(tok, i))`` form
     re-evaluated the split per ELEMENT (higher-order funcs are
@@ -107,9 +106,9 @@ def top_bigrams_corpus(spark, sf_dir):
     per document — measured 4× slower on the sf0.1 corpus."""
     docs = load_table(spark, sf_dir, "documents")
     # tokenize once behind a projection barrier (operators/dedup.py)
-    toked = docs.select(tokens(F.col("text")).alias("__tok"))
+    toked = docs.select(F.expr(TX.tokens_sx("text")).alias("__tok"))
     bigrams = toked.select(
-        F.explode(shingles(F.col("__tok"), k=2)).alias("bigram")
+        F.explode(F.expr(TX.shingles_sx("__tok", k=2))).alias("bigram")
     )
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     return (
@@ -177,7 +176,7 @@ def pmi_collocations_topk(spark, sf_dir):
     from oracle_to_cassandra_spark.staging import stage
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(TX.tokens(F.col("text")).alias("ts"))
+    toks = d.select(F.expr(TX.tokens_sx("text")).alias("ts"))
     toks = stage(toks)
     uni = (
         toks.select(F.explode("ts").alias("t"))
@@ -269,7 +268,7 @@ def zipf_fit_per_corpus(spark, sf_dir):
     second-moment ratios rounded at 4 dp."""
     d = load_table(spark, sf_dir, "documents")
     uni = (
-        d.select(F.explode(TX.tokens(F.col("text"))).alias("t"))
+        d.select(F.explode(F.expr(TX.tokens_sx("text"))).alias("t"))
         .groupBy("t")
         .agg(F.count("*").alias("c"))
     )

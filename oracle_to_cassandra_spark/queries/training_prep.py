@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.functions.hashing import base31, base31_sql
+from oracle_to_cassandra_spark.functions.hashing import base31_sql, base31_sx
 from oracle_to_cassandra_spark.queries.text_analysis import (
     QUALITY_SQL as _QUALITY_SQL,
 )
@@ -44,7 +44,7 @@ def _packed_cumsum(spark, sf_dir):
     parallel across partitions (a global cumsum would serialize onto
     one task at 100 TB)."""
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(TX.tokens(F.col("text"))).cast("long")
+    n_tokens = F.size(F.expr(TX.tokens_sx("text"))).cast("long")
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -106,12 +106,12 @@ def train_val_test_split(spark, sf_dir):
     lack), summarized per split. New documents never reshuffle old
     assignments."""
     d = load_table(spark, sf_dir, "documents")
-    h = base31(F.col("doc_id").cast("string")) % 10
+    h = F.expr(base31_sx("CAST(doc_id AS STRING)")) % 10
     split = (
         F.when(h < 8, "train").when(h == 8, "val").otherwise("test").alias("split")
     )
     return (
-        d.select(split, F.size(TX.tokens(F.col("text"))).cast("long").alias("nt"))
+        d.select(split, F.size(F.expr(TX.tokens_sx("text"))).cast("long").alias("nt"))
         .groupBy("split")
         .agg(F.count("*").alias("n_docs"), F.sum("nt").alias("n_tokens"))
     )
@@ -215,7 +215,7 @@ def dense_global_ids(spark, sf_dir):
     (block, doc_id) ≡ block offset + in-block rank, which is exactly
     the equivalence the pattern relies on."""
     d = load_table(spark, sf_dir, "documents")
-    block = (base31(F.col("doc_id").cast("string")) % N_ID_BLOCKS).alias("block")
+    block = (F.expr(base31_sx("CAST(doc_id AS STRING)")) % N_ID_BLOCKS).alias("block")
     rows = d.select("doc_id", block)
     counts = rows.groupBy("block").agg(F.count("*").alias("n"))
     w_off = (
@@ -283,15 +283,15 @@ def split_leakage_audit(spark, sf_dir):
     pairs = jaccard_verified_pairs(docs, 0.6)
 
     def _split(col):
-        h = base31(col.cast("string")) % 10
+        h = F.expr(base31_sx(f"CAST({col} AS STRING)")) % 10
         return F.when(h < 8, "train").when(h == 8, "val").otherwise("test")
 
     attached = pairs.select(
         "doc_a",
         "doc_b",
         "jaccard_ppm",
-        _split(F.col("doc_a")).alias("split_a"),
-        _split(F.col("doc_b")).alias("split_b"),
+        _split("doc_a").alias("split_a"),
+        _split("doc_b").alias("split_b"),
     )
     lo = F.least("split_a", "split_b")
     hi = F.greatest("split_a", "split_b")
@@ -458,7 +458,7 @@ def rag_chunking_overlap(spark, sf_dir):
     explode inside codegen; output is metadata (5 ints/chunk), the
     text itself stays in place until the embed stage streams it."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.col("text"))).cast("long")
+    n_tok = F.size(F.expr(TX.tokens_sx("text"))).cast("long")
     n_chunks = F.greatest(
         F.ceil((n_tok - CHUNK_SIZE) / CHUNK_STRIDE), F.lit(0)
     ).cast("long") + 1
@@ -513,11 +513,11 @@ def stratified_split_audit(spark, sf_dir):
     Scale: one scan computes stratum and split per row; the aggregate
     is strata×3-sized with map-side partials, and the ratio window
     re-uses the same grouping keys — no second scan, no join."""
-    from oracle_to_cassandra_spark.functions.hashing import md5_int64
+    from oracle_to_cassandra_spark.functions.hashing import md5_int64_sx
 
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.col("text")))
-    bucket = md5_int64(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 10
+    n_tok = F.size(F.expr(TX.tokens_sx("text")))
+    bucket = F.expr(md5_int64_sx("concat('split:', CAST(doc_id AS STRING))")) % 10
     tagged = d.select(
         "lang",
         F.when(n_tok >= 56, "long").otherwise("short").alias("tier"),
@@ -766,7 +766,7 @@ def dpo_preference_pairs(spark, sf_dir):
     Scale: one ranking window per language partition and one
     self-join on (lang, rank) — both shuffle on lang; the quality
     score is the corpus-wide deterministic formula
-    (`operators/text.quality_score`), micro-unit-integer so rank
+    (`operators/text.quality_score_sx`), micro-unit-integer so rank
     order is engine-exact."""
     from oracle_to_cassandra_spark.operators.text import quality_score_sx
 
@@ -874,7 +874,7 @@ def kv_cache_block_allocation(spark, sf_dir):
     Scale: pure per-row arithmetic + one keyed aggregate; the same
     query over real request logs sizes a production cache."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.col("text"))).cast("long")
+    n_tok = F.size(F.expr(TX.tokens_sx("text"))).cast("long")
     per_doc = d.select(
         "source",
         n_tok.alias("n_tokens"),
@@ -942,7 +942,7 @@ def length_bucketed_batching_waste(spark, sf_dir):
     window partitions by bucket (bounded partitions after the
     power-of-2 split); two keyed aggregates."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.col("text"))).cast("long")
+    n_tok = F.size(F.expr(TX.tokens_sx("text"))).cast("long")
     sized = d.select(
         "doc_id",
         n_tok.alias("n_tokens"),
@@ -1024,7 +1024,7 @@ def weighted_systematic_sample(spark, sf_dir):
     independently; the grid test is a per-row integer comparison, and
     the output is one row per source."""
     d = load_table(spark, sf_dir, "documents")
-    key = base31(F.col("doc_id").cast("string"))
+    key = F.expr(base31_sx("CAST(doc_id AS STRING)"))
     wdoc = d.select(
         "doc_id",
         "source",

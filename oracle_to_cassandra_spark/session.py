@@ -21,6 +21,8 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -68,3 +70,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, confs: Mapping[str, str | None]
+) -> Iterator[None]:
+    """Set session confs for the body and restore them on exit, also
+    when the body raises: a key set before gets its prior value back, a
+    key unset before is unset again. ``None`` values are skipped — the
+    key is neither read nor written."""
+    prior: dict[str, str | None] = {}
+    try:
+        for key, value in confs.items():
+            if value is not None:
+                prior[key] = spark.conf.get(key, None)
+                spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oracle_to_cassandra_spark.session import scoped_conf
+
 #: memory-sink temp views created by run_stream_to_memory, oldest
 #: first — retired lazily on the next call (see there for the bound)
 #: retired-view ledger: (session_token, weakref-to-wrapper, view_name).
@@ -225,45 +227,38 @@ def run_stream_to_memory(
     _retire_sink_views(spark, name)
     if state_partitions is None:
         state_partitions = DEFAULT_STATE_PARTITIONS
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    writer = (
+        result.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    # the no-data flag is consulted per trigger, so it spans start AND
+    # run; the state width is pinned at first start, so it spans start
+    # only
     nd_conf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nd = spark.conf.get(nd_conf, "true")
-    if not no_data_batches:
-        spark.conf.set(nd_conf, "false")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        writer = (
-            result.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-        if expect_single_batch:
-            data_batches = [
-                p for p in q.recentProgress if _input_rows(p) > 0
-            ]
-            if len(data_batches) > 1:
-                raise AssertionError(
-                    f"watermark-sensitive stream expected ONE data "
-                    f"micro-batch, got {len(data_batches)} — the source "
-                    f"fixture no longer delivers in a single batch, so "
-                    f"the initial-zero-watermark oracle premise is void"
-                )
-    finally:
-        q.stop()
-        q.awaitTermination()
-        # restored only after the run: unlike the state width (pinned
-        # at first start), this conf is consulted per trigger
-        if not no_data_batches:
-            spark.conf.set(nd_conf, prev_nd)
+    with scoped_conf(spark, {nd_conf: None if no_data_batches else "false"}):
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
+        ):
+            q = writer.start()
+        try:
+            q.processAllAvailable()
+            if expect_single_batch:
+                data_batches = [
+                    p for p in q.recentProgress if _input_rows(p) > 0
+                ]
+                if len(data_batches) > 1:
+                    raise AssertionError(
+                        f"watermark-sensitive stream expected ONE data "
+                        f"micro-batch, got {len(data_batches)} — the source "
+                        f"fixture no longer delivers in a single batch, so "
+                        f"the initial-zero-watermark oracle premise is void"
+                    )
+        finally:
+            q.stop()
+            q.awaitTermination()
     return spark.table(name)
 
 

@@ -28,6 +28,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oracle_to_cassandra_spark.session import scoped_conf
+
 
 def idempotent_batch_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
     """A foreachBatch callback writing each micro-batch under
@@ -78,10 +80,8 @@ def run_resumable_ingest(
         finally:
             batch_df.unpersist()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    width = None if state_partitions is None else str(state_partitions)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
         q = (
             source.writeStream.outputMode(output_mode)
             .foreachBatch(_write)
@@ -89,9 +89,6 @@ def run_resumable_ingest(
             .option("checkpointLocation", checkpoint_dir)
             .start()
         )
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
     finally:

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from oracle_to_cassandra_spark.operators.asof import asof_join
 from oracle_to_cassandra_spark.operators.graph import connected_components
-from oracle_to_cassandra_spark.operators.text import shingles, tokens
+from oracle_to_cassandra_spark.operators.text import shingles_sx, tokens_sx
 
 
 def _ts(spark, rows, schema):
@@ -97,7 +97,9 @@ def test_zscore_single_row_group_is_null_not_nan(spark):
 
 def test_shingles_short_doc_empty(spark):
     df = spark.createDataFrame([("a b",), ("a b c d",)], "text string")
-    out = df.select(F.size(shingles(tokens(F.col("text")))).alias("n")).collect()
+    out = df.select(
+        F.size(F.expr(shingles_sx(tokens_sx("text")))).alias("n")
+    ).collect()
     assert [r.n for r in out] == [0, 2]
 
 
@@ -153,7 +155,7 @@ def test_zipwith_bigrams_match_naive_python(spark):
     got = {
         r.bigram: r.freq
         for r in df.select(
-            F.explode(shingles(tokens(F.col("text")), k=2)).alias("bigram")
+            F.explode(F.expr(shingles_sx(tokens_sx("text"), k=2))).alias("bigram")
         )
         .groupBy("bigram")
         .agg(F.count("*").alias("freq"))

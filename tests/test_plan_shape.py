@@ -233,6 +233,9 @@ def test_global_aggregate_attach_is_bounded(spark):
         if bad:
             violations[name] = bad
     assert not violations, f"unbounded condition-less joins: {violations}"
+
+
+def test_hll_union_rollup_single_branch(spark):
     """The sketch rollup must aggregate customer ONCE and derive the
     grand total from unioned segment sketches — a detail∪total union
     of two branches re-executes the scan+agg (no CSE across plan

@@ -11,6 +11,8 @@ kept representative per key is processing-order dependent by design).
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -483,3 +485,22 @@ def test_left_outer_interval_join_watermark_boundary(spark, tmp_path):
         E.oracle_sql()["stream_stream_left_outer_interval_join"],
         name="stream_stream_left_outer_interval_join[boundary]",
     )
+
+
+def test_no_data_flag_restored_when_start_raises(spark):
+    """A stream that fails at start() must leave the trailing no-data
+    micro-batch enabled for the rest of the session, as it found it."""
+    from oracle_to_cassandra_spark.streaming.core import (
+        read_events_stream,
+        run_stream_to_memory,
+    )
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    assert spark.conf.get(key) == "true"
+    ev = read_events_stream(spark, SF_DIR)
+    # complete mode without an aggregation is rejected at start()
+    with pytest.raises(AnalysisException):
+        run_stream_to_memory(
+            ev.select("event_id"), output_mode="complete", no_data_batches=False
+        )
+    assert spark.conf.get(key) == "true"

@@ -1,33 +1,20 @@
-"""Column-form ≡ SQL-string (``_sx``) parity guards (r13 verdict item 4).
+"""Reconstruction pins for SQL-string forms whose Column form is
+gone: the hyperplane bucket, the PQ subvector slicer and the JL
+projection.
 
-r13 rewired the hot call sites from Column-API builders to ``_sx``
-SQL-string twins purely for plan-construction latency (guide §7.3);
-the two forms must parse to the IDENTICAL expression tree forever.
-Equivalence was proven in-session at the time (exceptAll probes +
-oracle sweeps) but nothing pinned it, so a later edit to either side
-could silently drift the pair apart — the oracle only guards twins
-currently on a driver-window query path.
-
-Each test builds the same projection both ways over the real sf0.001
-corpus and asserts bit-identical results: schema equality plus
-``exceptAll`` empty in BOTH directions. Doubles included — since both
-forms must compile to the same expression tree, even float
-accumulation order is identical, so binary equality is the correct
-bar (a tolerance would hide exactly the drift this file exists to
-catch).
-
-Two twins whose Column form was REMOVED in r13 (the hyperplane bucket
-and the JL projection) are pinned against a local reconstruction of
-the documented Column composition, byte-for-byte the pre-r13 builder.
+Each test builds the same projection from the ``_sx`` string and from
+a local Column composition of the documented formula over the real
+sf0.001 fixture, and asserts bit-identical results: schema equality
+plus ``exceptAll`` empty in BOTH directions. Doubles included — both
+forms compile to the same expression tree, so even float accumulation
+order is identical, and binary equality is the correct bar (a
+tolerance would hide exactly the drift these pins exist to catch).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from oracle_to_cassandra_spark.functions import hashing as H
-from oracle_to_cassandra_spark.functions import vector as V
-from oracle_to_cassandra_spark.operators import text as X
 from oracle_to_cassandra_spark.sources import load_table
 from tests.conftest import SF_DIR
 
@@ -40,93 +27,13 @@ def _assert_parity(df_col, df_sx):
     assert df_sx.exceptAll(df_col).isEmpty(), "_sx-form rows missing from Column form"
 
 
-def _docs(spark):
-    return load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-
-
 def _embs(spark):
     return load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
 
 
-def test_text_twins_parity(spark):
-    """fold_text / tokens / stopword_ratio / quality_score /
-    quality_micro — the text-quality family rewired in r13 batch 7."""
-    d = _docs(spark)
-    col_form = d.select(
-        "doc_id",
-        X.fold_text(F.col("text")).alias("folded"),
-        X.tokens(F.col("text")).alias("tok"),
-        X.stopword_ratio(X.tokens(F.col("text"))).alias("swr"),
-        X.quality_score(F.col("text")).alias("q"),
-        X.quality_micro(F.col("text")).alias("qm"),
-    )
-    sx_form = d.select(
-        "doc_id",
-        F.expr(X.fold_text_sx("text")).alias("folded"),
-        F.expr(X.tokens_sx("text")).alias("tok"),
-        F.expr(X.stopword_ratio_sx(X.tokens_sx("text"))).alias("swr"),
-        F.expr(X.quality_score_sx("text")).alias("q"),
-        F.expr(X.quality_micro_sx("text")).alias("qm"),
-    )
-    _assert_parity(col_form, sx_form)
-
-
-def test_shingles_twin_parity(spark):
-    """shingles over a shared token column (k = 3, the pipeline width,
-    plus k = 2 to cover the fold's variable depth)."""
-    d = _docs(spark).select("doc_id", X.tokens(F.col("text")).alias("tok"))
-    for k in (2, 3):
-        col_form = d.select("doc_id", X.shingles(F.col("tok"), k).alias("sh"))
-        sx_form = d.select("doc_id", F.expr(X.shingles_sx("tok", k)).alias("sh"))
-        _assert_parity(col_form, sx_form)
-
-
-def test_hashing_twins_parity(spark):
-    """md5_int64 / base31 / all 8 perm_hash permutations."""
-    d = _docs(spark)
-    col_form = d.select(
-        "doc_id",
-        H.md5_int64(F.col("text")).alias("h64"),
-        H.base31(F.col("text")).alias("h31"),
-        *[
-            H.perm_hash(H.base31(F.col("text")), i).alias(f"p{i}")
-            for i in range(H.N_PERM)
-        ],
-    )
-    sx_form = d.select(
-        "doc_id",
-        F.expr(H.md5_int64_sx("text")).alias("h64"),
-        F.expr(H.base31_sx("text")).alias("h31"),
-        *[
-            F.expr(H.perm_hash_sx(H.base31_sx("text"), i)).alias(f"p{i}")
-            for i in range(H.N_PERM)
-        ],
-    )
-    _assert_parity(col_form, sx_form)
-
-
-def test_vector_twins_parity(spark):
-    """dot / norm / cosine — reverse(embedding) supplies a distinct
-    second operand without a join."""
-    e = _embs(spark).withColumn("emb2", F.reverse(F.col("embedding")))
-    col_form = e.select(
-        "vec_id",
-        V.dot(F.col("embedding"), F.col("emb2")).alias("d"),
-        V.norm(F.col("embedding")).alias("n"),
-        V.cosine(F.col("embedding"), F.col("emb2")).alias("c"),
-    )
-    sx_form = e.select(
-        "vec_id",
-        F.expr(V.dot_sx("embedding", "emb2")).alias("d"),
-        F.expr(V.norm_sx("embedding")).alias("n"),
-        F.expr(V.cosine_sx("embedding", "emb2")).alias("c"),
-    )
-    _assert_parity(col_form, sx_form)
-
-
 def test_hyperplane_bucket_twin_parity(spark):
-    """hyperplane_bucket_sx vs the pre-r13 Column composition (removed
-    from the operator module; reconstructed here verbatim as the pin)."""
+    """hyperplane_bucket_sx vs the Column composition of the sign-bit
+    sum over per-hyperplane dot products."""
     from oracle_to_cassandra_spark.operators.similarity import (
         hyperplane_bucket_sx,
         hyperplane_signs,
@@ -138,7 +45,15 @@ def test_hyperplane_bucket_twin_parity(spark):
     def column_bucket(emb):
         sig = F.lit(0)
         for j, row in enumerate(signs):
-            dotj = V.dot(emb, F.array(*[F.lit(s) for s in row]))
+            dotj = F.aggregate(
+                F.zip_with(
+                    emb,
+                    F.array(*[F.lit(s) for s in row]),
+                    lambda x, y: x.cast("double") * y.cast("double"),
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
             sig = sig + F.when(dotj > 0, F.lit(1 << j)).otherwise(F.lit(0))
         return sig.cast("long")
 
@@ -150,9 +65,8 @@ def test_hyperplane_bucket_twin_parity(spark):
 
 
 def test_pq_subvectors_twin_parity(spark):
-    """similarity_pq._subvectors (SQL-string form, r14) vs the pre-r14
-    Column composition — reconstruction pin, like the hyperplane/JL
-    twins whose Column form was removed."""
+    """similarity_pq._subvectors vs the Column composition of the
+    per-subspace slice + micro-unit rounding."""
     from oracle_to_cassandra_spark.queries.similarity_pq import (
         M,
         SUB,
@@ -186,8 +100,8 @@ def test_pq_subvectors_twin_parity(spark):
 
 
 def test_jl_projection_twin_parity(spark):
-    """_project_sx vs the pre-r13 Column fold (same reconstruction
-    discipline as the hyperplane pin)."""
+    """_project_sx vs the Column fold of the per-row dot product,
+    scaled and rounded to 6 dp."""
     from oracle_to_cassandra_spark.queries.similarity_jl import (
         _MAT,
         _SCALE,

@@ -1,4 +1,4 @@
-"""Guards for the pinned case fold (operators/text.py::fold_text).
+"""Guards for the pinned case fold (operators/text.py::fold_text_sx).
 
 The unicode stress sweep (UNICODE_SWEEP.json) broke 42 queries at once
 through ONE primitive: JVM ``lower`` applies two root-locale
@@ -9,7 +9,7 @@ the fix in both directions:
 * dynamically — the folded primitives agree with DuckDB on the
   gauntlet characters;
 * statically — no NEW ``F.lower(`` site appears on free-text columns
-  outside fold_text (ASCII-contract columns are whitelisted), so the
+  outside fold_text_sx (ASCII-contract columns are whitelisted), so the
   class can't regress one inline tokenizer at a time.
 """
 
@@ -23,10 +23,9 @@ import pytest
 
 PKG = Path(__file__).resolve().parent.parent / "oracle_to_cassandra_spark"
 
-#: files:lines allowed to call F.lower directly — the fold itself,
-#: plus lowers of ASCII-contract columns (TPC-H enumerations)
+#: files allowed to call F.lower directly — lowers of ASCII-contract
+#: columns (TPC-H enumerations)
 _ALLOWED_LOWER_FILES = {
-    "operators/text.py",      # fold_text is THE lower site
     "queries/scalar_funcs.py",    # p_type (TPC-H enumeration, ASCII)
     "queries/migration_ops.py",   # o_orderpriority (ASCII enumeration)
     "queries/sql_surface.py",     # priority strings (ASCII)
@@ -44,7 +43,7 @@ def test_no_unpinned_spark_lower_on_text():
                 offenders.append(f"{rel}:{i}: {line.strip()}")
     assert not offenders, (
         "direct F.lower( on a non-whitelisted file — route text "
-        "case-folding through operators.text.fold_text (JVM "
+        "case-folding through operators.text.fold_text_sx (JVM "
         f"SpecialCasing diverges from DuckDB): {offenders}"
     )
 
@@ -83,12 +82,12 @@ def test_fold_text_matches_duckdb_lower(spark, gauntlet):
     from pyspark.sql import functions as F
 
     from oracle_to_cassandra_spark.operators.text import (
-        fold_text,
         fold_text_py,
+        fold_text_sx,
     )
 
     df = spark.createDataFrame([(gauntlet,)], "t STRING")
-    got = df.select(fold_text(F.col("t")).alias("x")).first()["x"]
+    got = df.select(F.expr(fold_text_sx("t")).alias("x")).first()["x"]
     want = duckdb.sql("SELECT lower(?)", params=[gauntlet]).fetchone()[0]
     assert got == want
     assert fold_text_py(gauntlet) == want
@@ -97,12 +96,12 @@ def test_fold_text_matches_duckdb_lower(spark, gauntlet):
 def test_fold_is_per_codepoint_on_the_special_cases(spark, gauntlet):
     from pyspark.sql import functions as F
 
-    from oracle_to_cassandra_spark.operators.text import fold_text
+    from oracle_to_cassandra_spark.operators.text import fold_text_sx
 
     df = spark.createDataFrame(
         [("İ",), ("ΣΟΣ",), ("ς",)], "t STRING"
     )
-    got = [r["x"] for r in df.select(fold_text(F.col("t")).alias("x")).collect()]
+    got = [r["x"] for r in df.select(F.expr(fold_text_sx("t")).alias("x")).collect()]
     # İ → single plain i (no combining dot), Σ → σ even word-finally,
     # pre-existing final sigma ς untouched
     assert got == ["i", "σοσ", "ς"]
