@@ -85,9 +85,9 @@ def doc_shingle_hashes(
         toked = documents.selectExpr(
             "doc_id", f"{tokens_sx('text')} AS __tok"
         )
-    # built as ONE parseable string (the _sx twins): the per-shingle
-    # hash lambda composed Column-by-Column cost ~3k py4j round trips
-    # per construction — pure driver latency (guide §7.3)
+    # built as ONE parseable string: one SQL parse instead of ~3k
+    # py4j round trips per construction for the per-shingle hash
+    # lambda composed Column by Column
     hashed = f"array_distinct(transform({shingles_sx('__tok', k)}, sh -> {base31_sx('sh')}))"
     return (
         toked.where(f"size(__tok) >= {k}")
@@ -292,8 +292,8 @@ def jaccard_verified_pairs_sql(threshold: float = 0.6, k: int = 3) -> str:
 def simhash_fingerprints(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """Per-doc SimHash: one md5 per distinct token; bit i of the
     fingerprint is the sign of Σ(±1) over bit i of the token hashes."""
-    # whole construction in _sx strings: the per-bit sum/fold loops
-    # composed ~1k py4j round trips for the 48-bit form (guide §7.3)
+    # whole construction in _sx strings: one SQL parse instead of
+    # ~1k py4j round trips for the 48-bit form's per-bit sum/fold loops
     t = documents.selectExpr(
         "doc_id", f"explode(array_distinct({tokens_sx('text')})) AS t"
     ).selectExpr("doc_id", "t", f"{md5_int64_sx('t')} AS h")

@@ -180,14 +180,14 @@ def hyperplane_bucket_sx(emb: str, signs) -> str:
     identical element order to the oracle's list_dot_product, and the
     corpus's worst |dot| margin (2·10⁻⁵) is 10 orders above any
     cross-engine float-accumulation drift, so the sign never flips
-    between engines. Built as ONE Spark-SQL string (r13, guide §7.3):
-    the Column form composed n_planes × dim literals one py4j round
-    trip at a time — ~2.5k trips of pure driver latency per
-    construction; ``D``-suffixed literals parse as DOUBLE, exactly
+    between engines. Built as ONE Spark-SQL string: one SQL parse
+    instead of composing n_planes × dim literals one py4j round trip
+    at a time (~2.5k trips of pure driver latency per construction);
+    ``D``-suffixed literals parse as DOUBLE, exactly
     ``F.lit(float)``. Entries render via ``repr`` (shortest exact
     round-trip form, parsed exactly by the JVM) — a fixed one-decimal
     format would silently round any future sign matrix whose entries
-    aren't exact at one decimal (r13 ADVICE item 3)."""
+    aren't exact at one decimal."""
     terms = ["0"]
     for j, row in enumerate(signs):
         arr = "array(" + ", ".join(f"{v!r}D" for v in row) + ")"

@@ -1,8 +1,7 @@
 """Weighted PageRank over the nation-level trade graph — the second
-iterative graph operator next to connected components
-(`operators/graph.py`), demonstrating the declarative-loop pattern on
-a DIFFERENT recurrence (weighted matrix-vector product per round
-rather than min-label contraction).
+iterative graph query next to connected components
+(`operators/graph.py`), on a DIFFERENT recurrence (weighted
+matrix-vector product per round rather than min-label contraction).
 
 Graph: one edge supplier-nation → customer-nation per shipping
 relationship, weighted by line-item count (the TPC-H Q7 join shape
@@ -13,30 +12,41 @@ source authority (the classic crawl-prioritization signal).
 
 Cross-engine exactness: the entire recurrence is INTEGER arithmetic —
 ranks live in 10⁻⁹ units of probability mass (S = 10⁹), every
-per-edge contribution is ``r·w // W`` (int64-safe: r ≤ S and Σw per
-node < 10⁹ keeps the product under 2⁶³ through petabyte-scale edge
-counts), damping 0.85 is applied as ``(85·x) // 100``. Both engines
-run the identical floor-division recurrence, so the driver hash
-compare works on raw rank integers with no float tolerance anywhere.
+per-edge contribution is ``r·w // W``, damping 0.85 is applied as
+``(85·x) // 100``. Every operand is non-negative, so Python's floor
+``//`` equals DuckDB's ``//`` (both truncate toward zero here), and
+Python ints cannot overflow; the driver hash compare works on raw rank
+integers with no float tolerance anywhere.
 
-Scale: the edge list aggregates once from the fact join (staged — it
-feeds every iteration); each iteration joins the 25-row rank vector
-(broadcast) to the edges and re-aggregates per destination — the
-standard distributed PageRank round, where edges shuffle ONCE at
-build and only the rank vector moves per iteration. Dangling nodes (no
-outgoing edges — at small SFs most nations have customers but no
-suppliers) spray their whole rank uniformly over the node set, as one
-extra broadcast scalar per round; without it ~60% of total mass
-bleeds away in 3 rounds (measured on the sf0.001 fixture).
+Scale: only the edge aggregate scales with the data — the fact join
+and its ``(src, dst) → w`` count run distributed, shuffling the fact
+rows once. The node set is nations, constant at every SF, so the
+aggregate is at most 25 × 25 = 625 rows. A distributed round only pays
+for itself when the state does not fit in one task; here it always
+does, so all rounds run inside ONE grouped-map task over the edge list
+— no driver loop, no per-round job, no staged rank vector. The generic
+distributed-round pattern lives on in `operators/graph.py` (connected
+components, whose state is node-sized). Dangling nodes (no outgoing
+edges — at small SFs most nations have customers but no suppliers)
+spray their whole rank uniformly over the node set; without it ~60%
+of total mass bleeds away in 3 rounds (measured on the sf0.001
+fixture).
 """
 
 from __future__ import annotations
 
+import sys
+
+import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from oracle_to_cassandra_spark.registry import query
 from oracle_to_cassandra_spark.sources import load_table
-from oracle_to_cassandra_spark.staging import stage
+
+# the grouped-map body ships to Python workers, where this package may
+# not be importable: pickle this module's functions by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 PR_SCALE = 1_000_000_000
 PR_ITERATIONS = 3
@@ -103,12 +113,12 @@ _PR_SQL = (
 def trade_graph_pagerank(spark, sf_dir):
     """3-round weighted PageRank over the supplier-nation →
     customer-nation trade graph; see the module docstring for the
-    integer recurrence and the 100 TB movement analysis."""
+    integer recurrence and why the rounds run in one task."""
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = stage(
+    edges = (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
@@ -117,73 +127,56 @@ def trade_graph_pagerank(spark, sf_dir):
         )
         .agg(F.count("*").alias("w"))
     )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("w_out"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    # one group holds the whole ≤625-row edge list; no rows, no group,
+    # so empty input yields an empty rank vector as the oracle does
+    return edges.groupBy().applyInPandas(
+        _pagerank_frame, schema="nationkey int, pagerank_nano bigint"
     )
-    # the node count and teleport mass are scalars of a 25-row table;
-    # carry them as a broadcast 1-row frame, not a driver constant
-    n_nodes = nodes.agg(F.count("*").alias("n_nodes"))
-    # `div` is Spark's INTEGRAL division (long div long -> long) — the
-    # exact twin of DuckDB's `//`.  A `/` here would cast both sides to
-    # double and round once pr*w exceeds 2^53 (~sf1000 edge counts),
-    # silently diverging from the oracle's int64 recurrence.
-    ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
-        "node", F.expr(f"{PR_SCALE}L div n_nodes").alias("pr")
+
+
+def _key(x):
+    """Nation key as a Python int; NULL (NaN in a nullable pandas
+    column) as None."""
+    return None if pd.isna(x) else int(x)
+
+
+def _pagerank_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    ranks = pagerank_ranks(
+        zip(map(_key, pdf["src"]), map(_key, pdf["dst"]), pdf["w"].tolist())
     )
-    weighted = edges.join(outw, "src")
+    return pd.DataFrame(
+        {
+            "nationkey": pd.array(list(ranks), dtype="Int32"),
+            "pagerank_nano": pd.array(list(ranks.values()), dtype="Int64"),
+        }
+    )
+
+
+def pagerank_ranks(edges) -> dict:
+    """The `_PR_SQL` recurrence over ``(src, dst, w)`` triples, in
+    Python ints. NULL keys follow the oracle's join semantics: a NULL
+    node never matches an equi-join, so its out-edges carry no mass,
+    mass sent to it is lost, and it always counts as dangling."""
+    edges = list(edges)
+    w_out: dict = {}
+    for src, _, w in edges:
+        w_out[src] = w_out.get(src, 0) + w
+    nodes = {src for src, _, _ in edges} | {dst for _, dst, _ in edges}
+    n = len(nodes)
+    if n == 0:
+        return {}
+    teleport = ((_D_DEN - _D_NUM) * PR_SCALE // _D_DEN) // n
+    ranks = dict.fromkeys(nodes, PR_SCALE // n)
     for _ in range(PR_ITERATIONS):
-        mass = (
-            weighted.join(
-                F.broadcast(ranks.withColumnRenamed("node", "src")), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("(pr * w) div w_out")).alias("mass"))
+        mass = dict.fromkeys(nodes, 0)
+        for src, dst, w in edges:
+            if src is not None and dst is not None:
+                mass[dst] += (ranks[src] * w) // w_out[src]
+        dmass = sum(
+            r for v, r in ranks.items() if v is None or v not in w_out
         )
-        # dangling nodes (no outgoing edges) spray their whole rank
-        # uniformly — dropping it instead bleeds ~60% of total mass in
-        # 3 rounds when only part of the node set has out-edges (the
-        # sf0.001 fixture has 10 supplier nations vs 25 nodes)
-        dangling = (
-            ranks.join(
-                outw.select(F.col("src").alias("node")), "node", "left_anti"
-            )
-            .agg(F.coalesce(F.sum("pr"), F.lit(0)).alias("dmass"))
-        )
-        teleport = F.expr(
-            f"({(100 - _D_NUM) * PR_SCALE}L div {_D_DEN}L) div n_nodes"
-        )
-        ranks = (
-            nodes.join(mass, "node", "left")
-            .crossJoin(F.broadcast(n_nodes))
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    teleport
-                    + F.expr(
-                        f"({_D_NUM}L * (coalesce(mass, 0L) + dmass div n_nodes))"
-                        f" div {_D_DEN}L"
-                    )
-                ).alias("pr"),
-            )
-        )
-        # each iteration reads `ranks` TWICE (mass join + dangling
-        # anti-join), so an unstaged rank vector doubles the plan per
-        # round — 80 exchanges by iteration 3. Stage the 25-row vector
-        # (the iterative-state handoff, as in operators/graph.py) so
-        # every round starts from a materialized leaf: 6 exchanges
-        # total and per-round cost independent of round number.
-        # LAZY (r13): the iteration count is FIXED — no driver
-        # decision between rounds — so the stage can materialize
-        # inside the single consuming job instead of launching one
-        # job per round (each round's RDD is still computed exactly
-        # once: both consumers share the RDD identity). Measured
-        # 1.83 → 1.33 s at sf0.1; CC keeps its eager rounds because
-        # its convergence probe IS a per-round driver decision.
-        ranks = stage(ranks)
-    return ranks.select(
-        F.col("node").alias("nationkey"), F.col("pr").alias("pagerank_nano")
-    )
+        ranks = {
+            v: teleport + (_D_NUM * (mass[v] + dmass // n)) // _D_DEN
+            for v in nodes
+        }
+    return ranks

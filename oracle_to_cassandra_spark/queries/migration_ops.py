@@ -147,8 +147,8 @@ def _zorder_keyed(orders) -> DataFrame:
 def _zvalue_sx(x: str, y: str) -> str:
     """Interleave the low _ZBITS of x (even positions) and y (odd) —
     pure shift/mask arithmetic, stays in whole-stage codegen. One
-    Spark-SQL string (r13, guide §7.3): the Column fold cost ~400
-    py4j round trips per construction."""
+    Spark-SQL string: one SQL parse instead of ~400 py4j round trips
+    per construction for a Column fold."""
     terms = ["CAST(0 AS BIGINT)"]
     for i in range(_ZBITS):
         terms.append(f"shiftleft((shiftright({x}, {i}) & 1), {2 * i})")

@@ -92,14 +92,14 @@ _JL_SQL = f"""
 def _project_sx(emb: str) -> str:
     """k_out sequential folds — identical operand order to the
     oracle's list_sum, all inside whole-stage codegen. Built as ONE
-    Spark-SQL string: the Column form composed 16 × 64 literal array
-    entries one py4j call at a time (~10k round trips of pure driver
-    latency per construction — guide §7.3); double literals carry the
+    Spark-SQL string: one SQL parse instead of composing 16 × 64
+    literal array entries one py4j call at a time (~10k round trips of
+    pure driver latency per construction); double literals carry the
     ``D`` suffix so they parse as DOUBLE, matching ``F.lit(float)``.
     Entries render via ``repr`` (shortest exact round-trip form, parsed
     exactly by the JVM) — a fixed one-decimal format would silently
     round any future matrix whose entries aren't exact at one decimal
-    (scaled Achlioptas/Gaussian planes; r13 ADVICE item 3)."""
+    (scaled Achlioptas/Gaussian planes)."""
     rows = []
     for row in _MAT:
         arr = "array(" + ", ".join(f"{v!r}D" for v in row) + ")"
@@ -112,7 +112,9 @@ def _project_sx(emb: str) -> str:
 
 
 def _sq_l2_sx(a: str, b: str) -> str:
-    """Spark-SQL string twin of the squared-L2 fold."""
+    """Squared L2 distance rounded to 6 dp, as ONE Spark-SQL string:
+    one SQL parse instead of a Column fold's per-node py4j round
+    trips."""
     return (
         f"round(aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"0.0D, (acc, x) -> acc + x), 6)"

@@ -126,10 +126,10 @@ _PQ_TOPK_SQL = f"""
 def _subvectors(e: DataFrame) -> DataFrame:
     """(vec_id, label, m, sv: array<long>) — one row per subspace,
     components quantized to integer micro-units (the family's single
-    per-row float round). Built as ONE Spark-SQL string (r14, guide
-    §7.3): the Column form composed M slice/transform/struct trees one
-    py4j round trip at a time (~600 trips per construction, ×3 uses
-    per PQ query); the parsed expression tree is identical."""
+    per-row float round). Built as ONE Spark-SQL string: one SQL parse
+    instead of composing M slice/transform/struct trees one py4j round
+    trip at a time (~600 trips per construction, ×3 uses per PQ
+    query)."""
     structs = ", ".join(
         f"struct({m} AS m, "
         f"transform(slice(embedding, {m * SUB + 1}, {SUB}), "
@@ -163,8 +163,8 @@ def _sq_l2_sx(a: str, b: str) -> str:
     arrays — a left fold of int64 squared differences. Associative and
     order-independent, so the argmin and every downstream rank are
     bit-stable across engines and partition orders. One Spark-SQL
-    string (r13, guide §7.3) — the Column fold cost ~25 py4j round
-    trips per use across five call sites."""
+    string: one SQL parse instead of ~25 py4j round trips per use
+    across five call sites."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"

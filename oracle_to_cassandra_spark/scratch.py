@@ -2,11 +2,11 @@
 state (bucketed tables, DDL round-trips, Derby databases, sink
 round-trips).
 
-Why per-session: round 2 hard-coded one shared ``/root/repo/.scratch``
-tree plus global catalog names (``orders_bkt``, ``ddl_orders_roundtrip``,
-one Derby db dir) with DROP+rmtree pre-wipes. Two concurrent sessions
-(pytest alongside bench, or a parallel driver) would then wipe each
-other's tables mid-query — and Derby embedded additionally allows only
+Why per-session: with one shared ``<checkout>/.scratch`` tree, global
+catalog names (``orders_bkt``, ``ddl_orders_roundtrip``, one Derby db
+dir) and DROP+rmtree pre-wipes, two concurrent sessions (pytest
+alongside bench, or a parallel driver) would wipe each other's tables
+mid-query — and Derby embedded additionally allows only
 ONE booting JVM per database directory. Every path and catalog name now
 carries a session token (pid + startup nonce), so concurrent sessions
 never collide; each session's subtree is removed at interpreter exit.
@@ -23,8 +23,13 @@ import os
 import shutil
 import uuid
 
-#: override point for tests / external orchestration
-BASE = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+#: ``.scratch/`` (git-ignored) in the checkout this package was imported
+#: from, so two checkouts never share sink tables; override point for
+#: tests / external orchestration
+BASE = os.environ.get(
+    "SPARK_GRAFT_SCRATCH",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"),
+)
 
 #: unique per interpreter: pid alone is not enough (pids recycle, and a
 #: driver may re-exec in-place), so add a startup nonce. Stable for the

@@ -39,20 +39,30 @@ from oracle_to_cassandra_spark.session import scoped_conf
 #: to drop anything, and if it died its views died with it.
 _SINK_VIEWS: list[tuple[str, "weakref.ref", str]] = []
 
-#: default state-partition width for streams that do not size their
-#: own. A streaming query PINS its state-partition count at first
-#: start — it is a property of the checkpoint, not of the session —
-#: so the right width is set by expected state SIZE, never by the
-#: batch-shuffle default (guide §2: partitioning derived from the
-#: data, not a constant tuned for one deployment). Every stateful
-#: operator here opens one state store per partition and commits one
-#: delta file per partition per micro-batch; running test-SF state
-#: (thousands of keys) at the 32-wide batch default quadruples that
-#: fixed cost for nothing. Production overrides at submit time via
-#: ``SPARK_GRAFT_STATE_PARTITIONS`` sized to peak keyed state.
-DEFAULT_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
-)
+#: cap for the default state-partition width below
+_STATE_CAP = 8
+
+
+def default_state_partitions(spark: SparkSession) -> int:
+    """State-partition width for streams that do not size their own.
+    A streaming query PINS its state-partition count at first start —
+    it is a property of the checkpoint, not of the session — so the
+    right width is set by expected state SIZE, never by the
+    batch-shuffle default (guide §2: partitioning derived from the
+    data, not a constant tuned for one deployment). Every stateful
+    operator here opens one state store per partition and commits one
+    delta file per partition per micro-batch; running test-SF state
+    (thousands of keys) at the 32-wide batch default quadruples that
+    fixed cost for nothing. Below 8 cores the width follows the core
+    count, so one task wave covers the stores (at ``local[4]`` a
+    width of 8 ran two waves for 150 state rows). Production
+    overrides at submit time via ``SPARK_GRAFT_STATE_PARTITIONS``
+    sized to peak keyed state."""
+    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
+    if env:
+        return int(env)
+    return min(_STATE_CAP, spark.sparkContext.defaultParallelism)
+
 
 #: state width for STREAM-STREAM JOINS, which open FOUR state stores
 #: per partition (two sides × two stores each: keyToNumValues +
@@ -226,7 +236,7 @@ def run_stream_to_memory(
     # with the session.
     _retire_sink_views(spark, name)
     if state_partitions is None:
-        state_partitions = DEFAULT_STATE_PARTITIONS
+        state_partitions = default_state_partitions(spark)
     writer = (
         result.writeStream.outputMode(output_mode)
         .format("memory")

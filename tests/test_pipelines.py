@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 from oracle_to_cassandra_spark import pipelines as P
 from oracle_to_cassandra_spark.sinks import read_partition
 from oracle_to_cassandra_spark.sources import load_table
+from oracle_to_cassandra_spark.scratch import BASE
 from tests.conftest import SF_DIR
 
-SCRATCH = "/root/repo/.scratch/tests"
+SCRATCH = os.path.join(BASE, "tests")
 
 
 def test_build_orders_table_point_lookup(spark):
@@ -87,7 +88,7 @@ def test_bench_summary_line_is_tail_sufficient():
     regression, pinned)."""
     import json
 
-    with open("/root/repo/BENCH_LOCAL.json") as fh:
+    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH_LOCAL.json")) as fh:
         full = json.loads(fh.read().strip())
     assert full["queries"], "full record empty"
     assert all(v >= 0 for v in full["queries"].values()), "errored query in record"

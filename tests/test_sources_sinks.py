@@ -17,9 +17,10 @@ from oracle_to_cassandra_spark.sinks import (
 )
 from oracle_to_cassandra_spark.sources import load_table, register_views
 from oracle_to_cassandra_spark.sources.jdbc import jdbc_options
+from oracle_to_cassandra_spark.scratch import BASE
 from tests.conftest import SF_DIR
 
-SCRATCH = "/root/repo/.scratch/tests"
+SCRATCH = os.path.join(BASE, "tests")
 
 
 def test_jdbc_options_plain():

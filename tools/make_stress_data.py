@@ -110,9 +110,9 @@ hash compare, and (c) exact-duplicate vectors are what semantic
 dedup exists to collapse — recall audits must hold at 100%
 duplication, not degrade.
 
-Output: /root/repo/.scratch/stress[_skew|_null]/ (gitignored). Verify:
+Output: .scratch/stress[_skew|_null]/ in the checkout (gitignored). Verify:
     python tools/make_stress_data.py --mode skew
-    python tools/sf_sweep.py /root/repo/.scratch/stress_skew --out SKEW_SWEEP.json
+    python tools/sf_sweep.py .scratch/stress_skew --out SKEW_SWEEP.json
 """
 
 from __future__ import annotations
