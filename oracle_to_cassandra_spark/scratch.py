@@ -28,7 +28,9 @@ import uuid
 #: tests / external orchestration
 BASE = os.environ.get(
     "SPARK_GRAFT_SCRATCH",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"),
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+    ),
 )
 
 #: unique per interpreter: pid alone is not enough (pids recycle, and a

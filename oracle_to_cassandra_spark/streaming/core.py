@@ -58,10 +58,7 @@ def default_state_partitions(spark: SparkSession) -> int:
     width of 8 ran two waves for 150 state rows). Production
     overrides at submit time via ``SPARK_GRAFT_STATE_PARTITIONS``
     sized to peak keyed state."""
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        return int(env)
-    return min(_STATE_CAP, spark.sparkContext.defaultParallelism)
+    return _core_width(spark, "SPARK_GRAFT_STATE_PARTITIONS", _STATE_CAP)
 
 
 #: state width for STREAM-STREAM JOINS, which open FOUR state stores
@@ -99,10 +96,18 @@ def pandas_state_partitions(spark: SparkSession) -> int:
     core count, which ``defaultParallelism`` carries on local mode and
     a cluster alike. Production overrides by keyspace via
     ``SPARK_GRAFT_PANDAS_STATE_PARTITIONS``."""
-    env = os.environ.get("SPARK_GRAFT_PANDAS_STATE_PARTITIONS")
+    return _core_width(
+        spark, "SPARK_GRAFT_PANDAS_STATE_PARTITIONS", _PANDAS_STATE_CAP
+    )
+
+
+def _core_width(spark: SparkSession, env_var: str, cap: int) -> int:
+    """The width set in ``env_var``, else one partition per core up to
+    ``cap``."""
+    env = os.environ.get(env_var)
     if env:
         return int(env)
-    return min(_PANDAS_STATE_CAP, spark.sparkContext.defaultParallelism)
+    return min(cap, spark.sparkContext.defaultParallelism)
 
 
 def _session_token(spark: SparkSession) -> str:

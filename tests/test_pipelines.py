@@ -88,7 +88,8 @@ def test_bench_summary_line_is_tail_sufficient():
     regression, pinned)."""
     import json
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH_LOCAL.json")) as fh:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH_LOCAL.json")) as fh:
         full = json.loads(fh.read().strip())
     assert full["queries"], "full record empty"
     assert all(v >= 0 for v in full["queries"].values()), "errored query in record"
